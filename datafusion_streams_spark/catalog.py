@@ -4,6 +4,10 @@ The reference never finished its SQL/catalog layer — ``src/kafka/
 context.rs`` is an empty placeholder (see SURVEY.md §3 entry point 3).
 In Spark this layer is one line per table: ``createOrReplaceTempView``.
 We ship it.
+
+Every fixture read in the engine goes through ``table()``: it alone
+knows where a table lives and how ``events`` is adapted. The loaders
+below are views over it.
 """
 
 from __future__ import annotations
@@ -29,21 +33,35 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events table with its TIMESTAMP(NANOS) column normalized.
+def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The one path to a fixture table: ``{sf_dir}/<name>.parquet``.
 
-    Spark has no nanosecond timestamp type (parquet NANOS is read as
-    long via spark.sql.legacy.parquet.nanosAsLong); convert with an
-    integer ns->us floor division — exactly what DuckDB does when it
+    Plain ``spark.read.parquet`` so Catalyst sees a native parquet
+    relation: predicate pushdown, column pruning and partition-level
+    parallelism all apply (a 100 TB table just means more row groups —
+    the plan shape is identical). A name outside ``TABLES`` raises
+    ``KeyError``.
+
+    ``events`` is adapted to the timestamp drift of its fixture: Spark
+    has no nanosecond timestamp type (parquet NANOS is read as long via
+    spark.sql.legacy.parquet.nanosAsLong), so ``ts`` is converted with
+    an integer ns->us floor division — exactly what DuckDB does when it
     narrows nanos to its microsecond timestamps, so both engines see
     identical values.
     """
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-    if dict(raw.dtypes).get("ts") == "bigint":
-        raw = raw.withColumn(
+    if name not in TABLES:
+        raise KeyError(f"unknown fixture table {name!r}; expected one of {TABLES}")
+    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn(
             "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
         )
-    return raw.select("event_id", "ts", "user_id", "event_type", "value", "props")
+    return df
+
+
+def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events table with its ``ts`` column normalized (see ``table``)."""
+    return table(spark, sf_dir, "events")
 
 
 def load_events_us(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -85,30 +103,32 @@ def spread(spark: SparkSession, df: DataFrame, *cols: str) -> DataFrame:
 def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents spread across the cluster for compute-heavy map
     pipelines (shingling, tokenization, quality scoring)."""
-    return spread(spark, spark.read.parquet(f"{sf_dir}/documents.parquet"), "doc_id")
+    return spread(spark, table(spark, sf_dir, "documents"), "doc_id")
+
+
+class _Tables(dict):
+    """Fixture tables by name, each read through ``table()`` the first
+    time it is indexed."""
+
+    def __init__(self, spark: SparkSession, sf_dir: str) -> None:
+        super().__init__()
+        self._spark, self._sf_dir = spark, sf_dir
+
+    def __missing__(self, name: str) -> DataFrame:
+        df = self[name] = table(self._spark, self._sf_dir, name)
+        return df
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every fixture parquet under ``sf_dir`` as a DataFrame.
-
-    Plain ``spark.read.parquet`` so Catalyst sees a native parquet
-    relation: predicate pushdown, column pruning and partition-level
-    parallelism all apply (a 100 TB table just means more row groups —
-    the plan shape is identical).
-    """
-    out = {
-        name: spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        for name in TABLES
-        if name != "events"
-    }
-    out["events"] = load_events(spark, sf_dir)
-    return out
+    """The fixture tables under ``sf_dir`` as a lazy mapping: a query
+    reads only the tables it indexes."""
+    return _Tables(spark, sf_dir)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Register every fixture table as a temp view (the SQL entry point
     the reference stubbed out and never built)."""
-    dfs = load_tables(spark, sf_dir)
+    dfs = {name: table(spark, sf_dir, name) for name in TABLES}
     for name, df in dfs.items():
         df.createOrReplaceTempView(name)
     return dfs

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from datafusion_streams_spark.catalog import table
 from datafusion_streams_spark.functions import as_double_array
 from datafusion_streams_spark.operators import query
 
@@ -64,7 +65,7 @@ def kmeans_k(n_rows: int, base_rows: int = BASE_KMEANS_ROWS) -> int:
 
 def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """vec_id + integer-quantized embedding (exact-sum domain)."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = table(spark, sf_dir, "embeddings")
     vq = F.transform(
         as_double_array("embedding"),
         lambda x: F.floor(x * F.lit(float(QSCALE)) + F.lit(0.5)).cast("long"),
@@ -289,7 +290,10 @@ def _corpus_fingerprint(sf_dir: str) -> tuple:
         )
     else:
         files = [p]
-    return tuple((f, _os.stat(f).st_size, _os.stat(f).st_mtime_ns) for f in files)
+    # one stat per file: two calls could pair a rewrite's new mtime with
+    # the old size
+    stats = [(f, _os.stat(f)) for f in files]
+    return tuple((f, st.st_size, st.st_mtime_ns) for f, st in stats)
 
 
 # Fitted-model memo: the Lloyd fit is deterministic in (corpus, n), so
@@ -313,7 +317,7 @@ def kmeans_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate pushdown): counting the quantized relation instead paid
     # its repartition exchange for a number the scan footer already
     # holds (r16; trivially equal — _quantized is row-preserving)
-    n = spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
+    n = table(spark, sf_dir, "embeddings").count()
     memo_key = (sf_dir, n, _corpus_fingerprint(sf_dir))
     model = _KMEANS_MODEL_MEMO.get(memo_key)
     if model is None:
@@ -842,7 +846,7 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     qdf = _quantized(spark, sf_dir).cache()
     # memo-key count from the raw parquet footer (metadata-only), not
     # the cached quantized relation — same number, no repartition job
-    n = spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
+    n = table(spark, sf_dir, "embeddings").count()
     cids, cents = _pq_train(qdf, memo_key=(sf_dir, n, _corpus_fingerprint(sf_dir)))
 
     # query subvectors (tiny by construction) -> exact ADC lookup table,
@@ -883,7 +887,7 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     qdf = _quantized(spark, sf_dir).cache()
     # memo-key count from the raw parquet footer (metadata-only), not
     # the cached quantized relation — same number, no repartition job
-    n = spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
+    n = table(spark, sf_dir, "embeddings").count()
     cids, cents = _pq_train(qdf, memo_key=(sf_dir, n, _corpus_fingerprint(sf_dir)))
     coarse_rows = qdf.orderBy("vec_id").limit(IVFPQ_COARSE).collect()
     coarse = [[v / float(QSCALE) for v in r["vq"]] for r in coarse_rows]

@@ -21,6 +21,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datafusion_streams_spark.catalog import table
 from datafusion_streams_spark.functions import dec, dsum
 from datafusion_streams_spark.operators import query
 
@@ -65,7 +66,7 @@ def _orders_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the fixture stores o_orderdate as TIMESTAMP; the roundtrip contract
     # under test is the DATE type (ORC additionally has no NTZ-timestamp
     # physical type to round-trip through), so cast at the source
-    return spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    return table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.col("o_orderdate").cast("date").alias("o_orderdate"),
         "o_orderpriority",
@@ -145,7 +146,7 @@ def files_partitioned_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datafusion_streams_spark.layouts import memoized_layout
 
     def _build(path: str) -> None:
-        spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+        table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderpriority", "o_totalprice"
         ).write.mode("overwrite").partitionBy("o_orderpriority").parquet(path)
 
@@ -189,7 +190,7 @@ def files_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconstructs exactly the union-by-name semantics. Schema merge is
     footer-only work at planning time; the scan itself stays map-only.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = table(spark, sf_dir, "documents")
     out = tempfile.mkdtemp(prefix="dfs_evo_")
     docs.filter(F.col("doc_id") % 2 == 0).select(
         "doc_id", "source", "n_chars"
@@ -246,7 +247,7 @@ def files_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the small-files mess is the FIXTURE a streaming job left behind;
     # the operation under test (and under time) is the compaction
     def _build(path: str) -> None:
-        spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+        table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderpriority", "o_totalprice"
         ).repartition(64).write.mode("overwrite").parquet(path)
 
@@ -299,7 +300,7 @@ def files_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: text write + permissive parse are both map-only; the
     quarantined rows keep their raw text for replay/debugging.
     """
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = table(spark, sf_dir, "orders")
     line = F.when(
         F.col("o_orderkey") % 50 == 0, F.lit("###corrupt###")
     ).otherwise(
@@ -367,7 +368,7 @@ def files_json_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-trip the double exactly — both hash-proven against the
     oracle computed from the original flat table. Map-only both ways.
     """
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = table(spark, sf_dir, "orders")
     doc = F.to_json(
         F.struct(
             F.col("o_orderkey"),
@@ -806,8 +807,8 @@ def files_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from datafusion_streams_spark.layouts import memoized_layout
 
-    def _commit(table: str, df: DataFrame, version: int) -> None:
-        data_dir = _os.path.join(table, f"data-v{version}")
+    def _commit(table_dir: str, df: DataFrame, version: int) -> None:
+        data_dir = _os.path.join(table_dir, f"data-v{version}")
         df.write.mode("overwrite").parquet(data_dir)
         files = sorted(
             _os.path.join(data_dir, f)
@@ -815,27 +816,27 @@ def files_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             if f.endswith(".parquet")
         )
         manifest = {"version": version, "files": files}
-        tmp = _os.path.join(table, f".manifest-v{version}.tmp")
+        tmp = _os.path.join(table_dir, f".manifest-v{version}.tmp")
         with open(tmp, "w") as fh:
             _json.dump(manifest, fh)
-        _os.rename(tmp, _os.path.join(table, f"manifest-v{version}.json"))
+        _os.rename(tmp, _os.path.join(table_dir, f"manifest-v{version}.json"))
 
     # both commits are the table's HISTORY — a fixture that pre-exists
     # at scale; the timed path is manifest resolution + the two scans
-    def _build(table: str) -> None:
-        _commit(table, _orders_subset(spark, sf_dir), 1)
+    def _build(table_dir: str) -> None:
+        _commit(table_dir, _orders_subset(spark, sf_dir), 1)
         _commit(
-            table,
-            spark.read.parquet(_os.path.join(table, "data-v1")).filter(
+            table_dir,
+            spark.read.parquet(_os.path.join(table_dir, "data-v1")).filter(
                 F.col("o_orderkey") % 7 != 0
             ),
             2,
         )
 
-    table = memoized_layout(sf_dir, "tt_orders", _build)
+    table_dir = memoized_layout(sf_dir, "tt_orders", _build)
 
     def _read_version(version: int) -> DataFrame:
-        with open(_os.path.join(table, f"manifest-v{version}.json")) as fh:
+        with open(_os.path.join(table_dir, f"manifest-v{version}.json")) as fh:
             manifest = _json.load(fh)
         return spark.read.parquet(*manifest["files"])
 

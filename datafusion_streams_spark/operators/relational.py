@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datafusion_streams_spark.catalog import load_events, load_tables
+from datafusion_streams_spark.catalog import load_events, load_tables, table
 from datafusion_streams_spark.functions import (
     davg,
     dec,
@@ -72,7 +72,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups so partial aggregation reduces ~everything map-side — the
     shuffle moves 6 rows per task regardless of input size.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = table(spark, sf_dir, "lineitem")
     return (
         li.filter(F.col("l_shipdate") <= "1998-09-02")
         .groupBy("l_returnflag", "l_linestatus")
@@ -207,7 +207,7 @@ def q6_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: all four predicates push down to the parquet scan (min/max
     row-group pruning on shipdate); only two columns are read.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = table(spark, sf_dir, "lineitem")
     return (
         li.filter(
             (F.col("l_shipdate") >= "1996-01-01")
@@ -286,7 +286,7 @@ def filter_project_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filter + narrow projection; the plan must show PushedFilters and a
     6-column ReadSchema (asserted in tests/test_plans.py). Map-only at
     any scale — no shuffle."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = table(spark, sf_dir, "lineitem")
     return (
         li.filter((F.col("l_quantity") >= 48) & (F.col("l_shipdate") >= "2000-01-01"))
         .select(
@@ -322,7 +322,7 @@ def agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx_count_distinct (HLL) — exposed in tests, kept out of the
     oracle because it is approximate by design.
     """
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = table(spark, sf_dir, "orders")
     return o.groupBy("o_orderpriority").agg(
         F.countDistinct("o_custkey").alias("n_customers"),
         F.count(F.lit(1)).alias("n_orders"),
@@ -344,7 +344,7 @@ GROUP BY ROLLUP(l_returnflag, l_linestatus)
 @query("agg_rollup", oracle=_ROLLUP_ORACLE, tags=("agg", "rollup"))
 def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP hierarchy totals; NULL grouping keys normalized to 'ALL'."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = table(spark, sf_dir, "lineitem")
     return (
         li.rollup("l_returnflag", "l_linestatus")
         .agg(F.count(F.lit(1)).alias("n_items"), dsum("l_quantity").alias("sum_qty"))
@@ -371,7 +371,7 @@ GROUP BY CUBE(o_orderstatus, o_orderpriority)
 @query("agg_cube", oracle=_CUBE_ORACLE, tags=("agg", "cube"))
 def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over two dimensions — all 2^2 grouping sets in one pass."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = table(spark, sf_dir, "orders")
     return (
         o.cube("o_orderstatus", "o_orderpriority")
         .agg(F.count(F.lit(1)).alias("n_orders"), dsum("o_totalprice").alias("total_spend"))
@@ -499,7 +499,7 @@ LIMIT 100
 def sort_topk_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-100: compiles to TakeOrderedAndProject — per-partition
     heaps + a 100-row driver merge, no global sort even at 100 TB."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = table(spark, sf_dir, "lineitem")
     return (
         li.select("l_orderkey", "l_linenumber", "l_extendedprice")
         .orderBy(F.desc("l_extendedprice"), "l_orderkey", "l_linenumber")
@@ -517,7 +517,7 @@ _SET_B = "SELECT c_custkey FROM customer WHERE c_acctbal > 5000"
 
 @query("set_union", oracle=f"{_SET_A} UNION {_SET_B}", tags=("setop",))
 def set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    c = table(spark, sf_dir, "customer")
     a = c.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
     b = c.filter(F.col("c_acctbal") > 5000).select("c_custkey")
     return a.union(b).distinct()
@@ -525,7 +525,7 @@ def set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("set_intersect", oracle=f"{_SET_A} INTERSECT {_SET_B}", tags=("setop",))
 def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    c = table(spark, sf_dir, "customer")
     a = c.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
     b = c.filter(F.col("c_acctbal") > 5000).select("c_custkey")
     return a.intersect(b)
@@ -533,7 +533,7 @@ def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("set_except", oracle=f"{_SET_A} EXCEPT {_SET_B}", tags=("setop",))
 def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    c = table(spark, sf_dir, "customer")
     a = c.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
     b = c.filter(F.col("c_acctbal") > 5000).select("c_custkey")
     return a.subtract(b)
@@ -563,7 +563,7 @@ FROM part
 def scalar_string_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String function battery (extends the reference's single exercised
     scalar, ``length`` — `/root/reference/tests/basic_tests.rs:60`)."""
-    p = spark.read.parquet(f"{sf_dir}/part.parquet")
+    p = table(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
         F.upper("p_name").alias("up_name"),
@@ -594,7 +594,7 @@ FROM orders
 
 @query("scalar_date_pack", oracle=_DATE_PACK_ORACLE, tags=("scalar", "date"))
 def scalar_date_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = table(spark, sf_dir, "orders")
     d = F.col("o_orderdate").cast("date")
     return o.select(
         "o_orderkey",
@@ -637,7 +637,7 @@ def scalar_math_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     positive values."""
     from pyspark.sql.types import DecimalType
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = table(spark, sf_dir, "lineitem")
     return li.select(
         "l_orderkey",
         "l_linenumber",
@@ -706,7 +706,7 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     the flag) before hunting a code regression — and bump the bound
     to 3σ/6% only with the measured |est−exact| in the commit
     message."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = table(spark, sf_dir, "orders")
     return o.groupBy("o_orderpriority").agg(
         F.count_distinct("o_custkey").cast("long").alias("exact_customers"),
         F.approx_count_distinct("o_custkey", rsd=0.02).alias("_est"),
@@ -803,7 +803,7 @@ FROM lineitem
 @query("scalar_conditional_pack", oracle=_CONDITIONAL_ORACLE, tags=("scalar", "conditional"))
 def scalar_conditional_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CASE / NULLIF / GREATEST / LEAST / COALESCE battery."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = table(spark, sf_dir, "lineitem")
     return li.select(
         "l_orderkey",
         "l_linenumber",
@@ -1016,7 +1016,7 @@ def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     — same query shape, bounded error, exposed via agg_approx_distinct's
     pattern.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.percentile("l_extendedprice", F.lit(0.5)).alias("p50_price"),
         F.percentile("l_extendedprice", F.lit(0.9)).alias("p90_price"),
@@ -1048,7 +1048,7 @@ def scalar_array_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns; scalar outputs keep the oracle hash stable."""
     from datafusion_streams_spark.functions import as_double_array
 
-    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+    e = table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double_array("embedding").alias("v")
     )
     v = F.col("v")
@@ -1106,7 +1106,7 @@ def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet").select("c_custkey", "c_acctbal")
+    c = table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
     j = ev.join(c, ev["user_id"] == c["c_custkey"], "full_outer")
     return (
         j.groupBy(
@@ -1155,7 +1155,7 @@ def agg_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     Measures are decimal-exact sums cast to double once, so the melted
     doubles hash identically to the oracle's UNION ALL formulation.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = table(spark, sf_dir, "lineitem")
     wide = li.groupBy("l_returnflag").agg(
         dsum("l_quantity").alias("sum_qty"),
         dsum("l_extendedprice").alias("sum_price"),
@@ -1206,7 +1206,7 @@ def agg_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays in tests/test_oracle_parity.py's accuracy test."""
     from pyspark.sql import Window
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = table(spark, sf_dir, "lineitem")
     w = Window.partitionBy("l_returnflag").orderBy("l_extendedprice")
     wn = Window.partitionBy("l_returnflag")
     ranked = li.select(
@@ -1279,7 +1279,7 @@ def join_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     costs the same pair scan as this fixture; corpus rows rejoin by
     exact key afterwards if row-level output is needed.
     """
-    p = spark.read.parquet(f"{sf_dir}/part.parquet")
+    p = table(spark, sf_dir, "part")
     names = p.groupBy("p_name").agg(F.count(F.lit(1)).cast("long").alias("n_parts"))
     a = names.select(F.col("p_name").alias("name_a"), F.col("n_parts").alias("n_parts_a"))
     b = names.select(F.col("p_name").alias("name_b"), F.col("n_parts").alias("n_parts_b"))
@@ -1318,7 +1318,7 @@ def scalar_bitwise_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bitwise-operator battery (and/or/xor/shifts/not/popcount) —
     exact integer semantics on both engines, the toolkit behind flag
     columns, bitmap indexes, and hash bucketing."""
-    p = spark.read.parquet(f"{sf_dir}/part.parquet")
+    p = table(spark, sf_dir, "part")
     size = F.col("p_size")
     return p.select(
         "p_partkey",
@@ -1370,7 +1370,7 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         "salt", F.pmod(F.col("event_id"), F.lit(_SALT_JOIN_N)).cast("int")
     )
     dim = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
+        table(spark, sf_dir, "customer")
         .select("c_custkey")
         .withColumn("salt", F.explode(F.array(*[F.lit(i) for i in range(_SALT_JOIN_N)])))
     )
@@ -1477,8 +1477,8 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_").replace("-", "_")
     ot, lt = f"dfs_orders_b_{tag}", f"dfs_lineitem_b_{tag}"
 
-    def ensure(table: str, src: str, cols: list[str], key: str) -> None:
-        if spark.catalog.tableExists(table):
+    def ensure(name: str, src: str, cols: list[str], key: str) -> None:
+        if spark.catalog.tableExists(name):
             return
         # a PRIOR session's managed-table directory may survive in the
         # warehouse while this session's catalog has no entry — clear it
@@ -1486,10 +1486,10 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         warehouse = spark.conf.get(
             "spark.sql.warehouse.dir", "spark-warehouse"
         ).removeprefix("file:")
-        shutil.rmtree(f"{warehouse}/{table}", ignore_errors=True)
-        spark.read.parquet(f"{sf_dir}/{src}.parquet").select(*cols).write.mode(
+        shutil.rmtree(f"{warehouse}/{name}", ignore_errors=True)
+        table(spark, sf_dir, src).select(*cols).write.mode(
             "overwrite"
-        ).bucketBy(8, key).sortBy(key).saveAsTable(table)
+        ).bucketBy(8, key).sortBy(key).saveAsTable(name)
 
     ensure(ot, "orders", ["o_orderkey", "o_orderpriority"], "o_orderkey")
     ensure(lt, "lineitem", ["l_orderkey", "l_extendedprice"], "l_orderkey")
@@ -1580,7 +1580,7 @@ def agg_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle on the group key with map-side partials, the
     same distributed-moments shape as events_value_trend.
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = table(spark, sf_dir, "lineitem")
     x = F.round("l_quantity", 0).cast("long")
     y = F.round(F.col("l_extendedprice") * 100, 0).cast("long")
     p = li.select("l_returnflag", x.alias("x"), y.alias("y"))
@@ -1631,8 +1631,8 @@ def agg_string_concat_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice(array_sort(...), 1, k) and emit the count alongside (the
     count column here shows the pattern).
     """
-    s = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    n = spark.read.parquet(f"{sf_dir}/nation.parquet")
+    s = table(spark, sf_dir, "supplier")
+    n = table(spark, sf_dir, "nation")
     return (
         s.join(F.broadcast(n), s["s_nationkey"] == n["n_nationkey"])
         .groupBy("n_name")
@@ -1689,7 +1689,7 @@ def join_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-partition heaps.
     """
     items = (
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+        table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
     )
@@ -1763,7 +1763,7 @@ def scalar_map_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: pure per-row projection, whole-stage codegen, no shuffle.
     """
-    p = spark.read.parquet(f"{sf_dir}/part.parquet")
+    p = table(spark, sf_dir, "part")
     attrs = F.create_map(
         F.lit("brand"), F.col("p_brand"), F.lit("type"), F.col("p_type")
     )
@@ -1808,7 +1808,7 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     key — same single shuffle as the plain join; the NULL group is one
     key and skews like any hot key (salt it if NULLs dominate).
     """
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = table(spark, sf_dir, "orders")
     k = o.select(
         "o_orderkey",
         F.when(F.col("o_orderkey") % 10 == 0, F.lit(None))
@@ -1860,7 +1860,7 @@ def set_ops_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     tagged unions — one shuffle each on the full row key; the counting
     projection here adds a tiny distinct-key rollup.
     """
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = table(spark, sf_dir, "orders")
     a = o.filter(F.col("o_orderkey") % 3 == 0).select(
         F.col("o_orderstatus").alias("s"), F.col("o_orderpriority").alias("p")
     )
@@ -1944,7 +1944,7 @@ def agg_skew_kurtosis(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle with map-side partial power sums — the
     classic distributed-moments sketch (constant state per group).
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = table(spark, sf_dir, "lineitem")
     y = F.round(F.col("l_extendedprice") * 100, 0).cast("long")
     p = li.select("l_returnflag", y.alias("y"))
     d38 = "decimal(38,0)"
@@ -2002,7 +2002,7 @@ def agg_grouping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     contributes to 4 grouping sets map-side); gid is computed from the
     grouping bit vector — no extra pass.
     """
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = table(spark, sf_dir, "orders")
     return (
         o.cube("o_orderstatus", "o_orderpriority")
         .agg(
@@ -2058,7 +2058,7 @@ def agg_min_max_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: single shuffle with map-side partial arg-extrema (constant
     state per group) — strictly cheaper than the window formulation.
     """
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = table(spark, sf_dir, "orders")
     cents_hi = F.round(F.col("o_totalprice") * 100, 0).cast("long") * 100000000
     ordkey = cents_hi + (F.lit(99999999) - F.col("o_orderkey"))
     ordkey_min = cents_hi + F.col("o_orderkey")
@@ -2123,7 +2123,7 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = table(spark, sf_dir, "lineitem")
     base = li.select(
         "l_returnflag",
         "l_linestatus",
@@ -2179,7 +2179,7 @@ def scalar_regexp_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashing); counts via regexp_extract_all length on the oracle side
     mirror regexp_count exactly.
     """
-    p = spark.read.parquet(f"{sf_dir}/part.parquet")
+    p = table(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
         F.regexp_extract("p_name", r"^(\w+)\s+(\w+)", 2).alias("second_word"),
@@ -2214,7 +2214,7 @@ def agg_boolean_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-neutral hashing, and the ratio divides two exactly-counted
     integers (one deterministic float op, identical in both engines).
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = table(spark, sf_dir, "lineitem")
     high = F.count_if(F.col("l_quantity") > 25)
     return li.groupBy("l_returnflag").agg(
         high.cast("long").alias("n_high_qty"),
@@ -2274,7 +2274,7 @@ def agg_linear_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     written as the same two-factor product in both engines, not a
     pow(), to keep the operation sequence literal).
     """
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = table(spark, sf_dir, "lineitem")
     p = li.select(
         "l_returnflag",
         F.round("l_quantity", 0).cast("long").alias("x"),

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from datafusion_streams_spark.catalog import load_events
+from datafusion_streams_spark.catalog import load_events, table
 from datafusion_streams_spark.functions import (
     dec,
     dsum,
@@ -53,7 +53,7 @@ def window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     AQE skew-split. For extreme skew, pre-aggregate with a salted
     partial top-k before the window (same pattern as salted joins).
     """
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), "o_orderkey")
     return (
         o.select(
@@ -87,7 +87,7 @@ FROM orders
 def window_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running per-customer spend; decimal accumulation keeps the running
     values exact regardless of partition/merge order."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = table(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
         .orderBy("o_orderdate", "o_orderkey")
@@ -206,7 +206,7 @@ WINDOW w AS (PARTITION BY s_nationkey ORDER BY s_acctbal DESC, s_suppkey)
 
 @query("window_rank_battery", oracle=_RANK_ORACLE, tags=("window", "rank"))
 def window_rank_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = spark.read.parquet(f"{sf_dir}/supplier.parquet")
+    s = table(spark, sf_dir, "supplier")
     w = Window.partitionBy("s_nationkey").orderBy(F.desc("s_acctbal"), "s_suppkey")
     wfull = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     return s.select(
@@ -469,7 +469,7 @@ def window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     w = W.partitionBy("c_mktsegment").orderBy("c_acctbal", "c_custkey")
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    c = table(spark, sf_dir, "customer")
     return c.select(
         "c_custkey",
         "c_mktsegment",
@@ -859,7 +859,7 @@ def window_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame count. Scale: one shuffle on o_custkey; the two-sided frame
     is a single sliding pass per partition (no re-scan per row).
     """
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = table(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
         .orderBy("o_orderdate", "o_orderkey")
@@ -983,7 +983,7 @@ def window_equidepth_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only) or a range-partitioned two-pass assignment, trading the
     single-point sort for bounded error or one extra exchange.
     """
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = table(spark, sf_dir, "orders")
     w = Window.orderBy("o_totalprice", "o_orderkey")
     return (
         o.select("o_totalprice", F.ntile(10).over(w).cast("long").alias("bucket"))

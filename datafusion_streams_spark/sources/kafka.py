@@ -39,6 +39,8 @@ from pyspark.sql.types import (
     TimestampNTZType,
 )
 
+from datafusion_streams_spark.catalog import table
+
 
 def _events_ts_is_nanos(sf_dir: str) -> bool:
     """True iff the events fixture stores ``ts`` as TIMESTAMP(NANOS) (or a
@@ -200,7 +202,7 @@ def kafka_like_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`/root/reference/tests/utils.rs:214-220`): key "Key {id}",
     value "Message {id}", UTF-8 encoded to binary.
     """
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = table(spark, sf_dir, "events")
     return ev.select(
         F.encode(F.concat(F.lit("Key "), F.col("event_id").cast("string")), "UTF-8").alias("key"),
         F.encode(F.concat(F.lit("Message "), F.col("event_id").cast("string")), "UTF-8").alias("value"),

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datafusion_streams_spark.catalog import table
 from datafusion_streams_spark.functions import dsum
 from datafusion_streams_spark.operators import query
 from datafusion_streams_spark.operators.reference import _REF_PIPELINE_ORACLE
@@ -333,7 +334,7 @@ def streaming_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = events_stream(spark, sf_dir)
     dim = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
+        table(spark, sf_dir, "customer")
         .select("c_custkey", "c_mktsegment")
     )
     joined = ev.join(F.broadcast(dim), ev["user_id"] == dim["c_custkey"])
@@ -1079,7 +1080,7 @@ def streaming_csv_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     land = _tf.mkdtemp(prefix="dfs_csv_land_")
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type"
     )
     ev.repartition(4).write.mode("overwrite").option("header", "true").csv(land)
@@ -1138,7 +1139,7 @@ def streaming_avro_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_avro_py(spark)
     land = _tf.mkdtemp(prefix="dfs_avro_land_")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+    orders = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority"
     )
     orders.repartition(4).write.format("avro_py").option("path", land).mode(
@@ -1278,7 +1279,7 @@ def streaming_multi_source_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     land = _tf.mkdtemp(prefix="dfs_union_land_")
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+    ev = table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type"
     )
     ev.filter(F.col("event_id") % 2 == 0).repartition(2).write.mode(

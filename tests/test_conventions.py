@@ -84,6 +84,22 @@ def test_no_row_at_a_time_python_udf():
     )
 
 
+def test_fixture_reads_go_through_catalog_table():
+    """Only ``catalog.table`` knows where a fixture table lives and how
+    ``events`` is adapted; every other module reads fixtures through it."""
+    offenders = []
+    for f in _source_files():
+        if f.relative_to(PKG) == Path("catalog.py"):
+            continue
+        for i, line in enumerate(f.read_text().splitlines(), 1):
+            if 'read.parquet(f"{sf_dir}/' in line:
+                offenders.append(f"{f.relative_to(PKG)}:{i}")
+    assert offenders == [], (
+        f"direct fixture reads at {offenders}: use "
+        'catalog.table(spark, sf_dir, "<name>") instead'
+    )
+
+
 def test_reuse_audit_fingerprints_catch_the_q15_class():
     """The r10 review found the original fingerprints kept raw tree
     glyphs, so the same duplicated subtree at two DIFFERENT tree depths

@@ -75,6 +75,44 @@ def test_embeddings_vector_type():
     assert emb_fields, "embeddings.parquet has no list-typed vector column"
 
 
+def test_load_tables_reads_only_the_indexed_table(spark, monkeypatch):
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from datafusion_streams_spark.catalog import load_tables
+
+    paths = []
+    original = DataFrameReader.parquet
+
+    def counting(self, *args, **kwargs):
+        paths.extend(args)
+        return original(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting)
+    tables = load_tables(spark, SF_DIR)
+    assert paths == []
+    orders = tables["orders"]
+    assert tables["orders"] is orders
+    assert paths == [f"{SF_DIR}/orders.parquet"]
+
+
+def test_unknown_table_name_raises_key_error(spark):
+    from datafusion_streams_spark.catalog import load_tables, table
+
+    with pytest.raises(KeyError):
+        table(spark, SF_DIR, "no_such_table")
+    with pytest.raises(KeyError):
+        load_tables(spark, SF_DIR)["no_such_table"]
+
+
+def test_table_applies_the_events_adapter(spark):
+    from datafusion_streams_spark.catalog import load_events, table
+
+    ev = table(spark, SF_DIR, "events")
+    assert ev.schema == load_events(spark, SF_DIR).schema
+    assert ev.columns == ["event_id", "ts", "user_id", "event_type", "value", "props"]
+    assert dict(ev.dtypes)["ts"] == "timestamp_ntz"
+
+
 def test_streaming_and_batch_events_ts_agree(spark):
     """End-to-end guard: the streamed events read must yield the exact
     same (min, max, sum-of-epoch-micros) ts fingerprint as the batch

@@ -22,10 +22,7 @@ import sys
 
 sys.path.insert(0, "/root/repo")
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from datafusion_streams_spark.catalog import TABLES  # noqa: E402
 
 
 def main() -> int:
